@@ -1,9 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A failing
+  * entry does not stop the dump: the rest still run and the oracle SQL
+  * is still written, then every failure is printed and the run exits
+  * non-zero. A `VirtualMachineError` stops it at once.
+  */
 object Verify {
+
+  /** Write each entry's result to `outDir/<name>`; returns the entries
+    * that threw, in run order.
+    */
+  def dumpAll(spark: SparkSession, sfDir: String, outDir: String,
+      entries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[(String, Throwable)] =
+    entries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch {
+        case e: VirtualMachineError => throw e
+        case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -27,15 +51,8 @@ object Verify {
     // queries (the driver never sets it, so its runs stay complete)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dumpAll(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -60,5 +77,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(resolve(v))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} entries failed:")
+      failed.foreach { case (name, e) => System.err.println(s"[verify]   $name: $e") }
+      sys.exit(1)
+    }
   }
 }

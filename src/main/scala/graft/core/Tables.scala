@@ -105,11 +105,22 @@ object Tables {
     * regeneration contract: any file length/mtime change rebuilds the
     * plan, so a session that overwrites a table sees the new files
     * (spec-pinned by the regeneration tests). Values also carry their
-    * session: a frame from a stopped session is never served.
+    * session: a frame from a stopped session is never served, and its
+    * entries are dropped at the next insert. The memo is bounded: past
+    * [[PlanCacheCap]] entries the least recently read goes (a crawl
+    * loop reads a fresh snapshot directory every cycle).
     */
+  private[core] val PlanCacheCap = 64
+
   private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String), (String, SparkSession, DataFrame)]()
+    new java.util.LinkedHashMap[(String, String), (String, SparkSession, DataFrame)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, String), (String, SparkSession, DataFrame)]): Boolean =
+        size() > PlanCacheCap
+    }
+
+  private[core] def planCacheSize: Int = planCache.synchronized(planCache.size())
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Timestamp adaptation (NTZ reinterpretation, date→timestamp,
@@ -124,11 +135,14 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val key = (dir, name)
     val fp = IndexScratch.sourceFingerprint(spark, s"$dir/$name.parquet")
-    val hit = planCache.get(key)
+    val hit = planCache.synchronized(planCache.get(key))
     if (hit != null && hit._1 == fp && (hit._2 eq spark)) hit._3
     else {
       val df = normalize(spark.read.parquet(s"$dir/$name.parquet"), name)
-      planCache.put(key, (fp, spark, df))
+      planCache.synchronized {
+        planCache.values.removeIf(_._2.sparkContext.isStopped)
+        planCache.put(key, (fp, spark, df))
+      }
       df
     }
   }

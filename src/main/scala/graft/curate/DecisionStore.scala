@@ -3,9 +3,9 @@ package graft.curate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Pipeline
+import graft.core.IndexScratch
 import graft.core.IndexScratch.{ensureBuilt, scratchBase, sourceFingerprint}
 import graft.core.Tables
-import graft.sinks.Sinks
 
 /** Persisted curation DECISION TABLE — one decision run, many readers.
   *
@@ -39,10 +39,11 @@ import graft.sinks.Sinks
   */
 object DecisionStore {
 
-  private val Buckets = 32
+  private def decisions(basePath: String): IndexScratch.Part =
+    IndexScratch.Part(basePath, "decisions", "doc_id")
 
-  private def tableName(basePath: String): String =
-    "graft_decisions_" + graft.core.IndexScratch.md5hex(basePath).take(10)
+  private def tombstones(basePath: String): IndexScratch.Tombstones =
+    IndexScratch.Tombstones(basePath, "doc_id")
 
   /** Build the wide decision table: the full report chain (dedup gate
     * from the persisted label index) plus `source` and quality `score`,
@@ -55,8 +56,7 @@ object DecisionStore {
     val wide = Pipeline.curationReportFrom(g)
       .join(Tables.documents(spark, dir).select("doc_id", "source"), "doc_id")
       .join(g.score, "doc_id")
-    Sinks.writeBucketed(wide, tableName(basePath), "doc_id",
-      Buckets, Some(s"$basePath/decisions"))
+    decisions(basePath).overwrite(wide)
     // FROZEN gate models, persisted next to the decisions so an
     // incremental batch (appendDecisions) can be scored without
     // re-scanning the corpus that defined the scales: the vocab-sized
@@ -110,9 +110,13 @@ object DecisionStore {
     *    reference's storage.rs convention; equals min-id when crawls
     *    arrive id-ordered).
     *
-    * Append is IDEMPOTENT by doc_id: batch ids already present in the
-    * physical table are skipped (one narrow anti-join, pinned before
-    * the write), so replays repair rather than duplicate, and for
+    * The batch is gated against the band index as it stood BEFORE the
+    * batch: its own ids are hidden from the index side, so a document
+    * it (re-)presents never counts as its own corpus. The band index
+    * takes the full batch first and the decision rows — the commit
+    * point the crawl diff classifies against — land last; a replay
+    * after a crash between the two recomputes the same verdicts, and
+    * the index append's own id guard makes its half a no-op. For
     * id-ordered increments batch-splitting is invariant — appending a
     * crawl in K ordered chunks yields the same table as one chunk
     * (spec-pinned).
@@ -125,12 +129,7 @@ object DecisionStore {
     import org.apache.spark.sql.functions._
     graft.functions.GraftFunctions.register(spark)
     val base = ensureDecisions(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base),
-      s"$base/decisions", "doc_id", Buckets)
-    // fresh listing for the insert-only guard: a stale relation cache
-    // (appends from another session) would let a replay double-insert
-    spark.catalog.refreshTable(tableName(base))
-    val existing = spark.table(tableName(base))
+    val existing = decisions(base).physical(spark)
     val newDocs = batch.select("doc_id", "text", "source")
       .join(existing.select("doc_id"), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
@@ -149,7 +148,7 @@ object DecisionStore {
         spark.read.parquet(s"$base/models/decon_grams"))
       .select(col("doc_id"), col("contaminated"))
     val inc = graft.dedup.MinhashIndexStore
-      .dedupIncrementalAgainstIndex(newDocs, s"$base/mh")
+      .dedupBatchAgainstIndex(newDocs, s"$base/mh")
       .select(col("doc_id"), col("is_dup"))
     // within-batch near-dup survivor: min-id per batch cluster (the
     // dedup_cluster convention restricted to the batch)
@@ -180,15 +179,12 @@ object DecisionStore {
       .join(newDocs.select("doc_id", "source"), "doc_id")
       .select(existing.columns.map(col).toIndexedSeq: _*)
       .materializeOnce(eager = true) // pin before mutating what it read
-    Sinks.appendBucketed(wide, tableName(base), "doc_id", Buckets)
-    // extend the band index with the batch AFTER its verdicts are
-    // pinned and its rows landed, so the next increment sees this one
-    // as indexed corpus. Passed the FULL batch, not the guarded
-    // newDocs: appendToIndex carries its own id guard, so a replay
-    // whose decision rows already landed (newDocs empty) still repairs
-    // a crashed index half instead of leaving it missing forever.
+    // extend the band index with the FULL batch (its own id guard skips
+    // what a crashed attempt landed) so the next increment sees this
+    // one as indexed corpus, then commit the decision rows
     graft.dedup.MinhashIndexStore.appendToIndex(
       batch.select("doc_id", "text"), s"$base/mh")
+    decisions(base).append(wide)
     // return the LIVE view (not the raw catalog table): a tombstoned id
     // whose physical row survives must stay invisible to readers
     decisionTable(spark, dir)
@@ -206,15 +202,6 @@ object DecisionStore {
     base
   }
 
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (graft.core.IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
   /** The persisted decision table for a corpus, built if missing or
     * stale (corpus-fingerprint marker). Wide schema: the report's
     * columns + `source` + `score`. Tombstoned rows (see
@@ -223,53 +210,29 @@ object DecisionStore {
     */
   def decisionTable(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureDecisions(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base),
-      s"$base/decisions", "doc_id", Buckets)
-    // drop any cached file listing for the table: appends can arrive
-    // from ANOTHER session (the streaming gate's foreachBatch clone),
-    // and a stale relation cache would silently serve the pre-append
-    // file set. One directory re-list per read — the price a shared
-    // metastore pays anyway.
-    spark.catalog.refreshTable(tableName(base))
-    val t = spark.table(tableName(base))
-    tombstones(spark, base)
-      .map(tomb => t.join(
-        org.apache.spark.sql.functions.broadcast(tomb.select("doc_id")),
-        Seq("doc_id"), "left_anti"))
-      .getOrElse(t)
+    tombstones(base).live(decisions(base).physical(spark))
   }
 
   /** Remove docs from the decision table by TOMBSTONE — the
     * crawl-to-crawl removal move ([[appendDecisions]]'s inverse; the
-    * reference's diff classifies vanished articles as `deleted`):
-    * writes only the merged id set (O(deleted), never O(table)), every
-    * reader filters it away, and the store's band index tombstones the
-    * same ids (`MinhashIndexStore.deleteFromIndex`) so a deleted doc
-    * stops acting as a duplicate SOURCE for future increments. Note
-    * what deliberately does NOT change: surviving rows keep their
+    * reference's diff classifies vanished articles as `deleted`): the
+    * store's band index tombstones the ids first
+    * (`MinhashIndexStore.deleteFromIndex`) so a deleted doc stops
+    * acting as a duplicate SOURCE for future increments, then the
+    * decision tombstones — the commit point the crawl diff classifies
+    * against — land last, so a crash between the two replays both.
+    * Note what deliberately does NOT change: surviving rows keep their
     * verdicts — a doc whose only near-dup was deleted stays
     * `dedup_keep = 0` until the next fingerprint-triggered rebuild
     * (frozen-verdict contract, same trade as append's bridge caveat).
     *
-    * Idempotent (id-set union); unknown ids are no-ops. A deleted id
-    * stays deleted even if re-appended ([[appendDecisions]]'s guard
-    * keys on physical rows); compact first to resurrect.
-    *
     * @return the post-delete (live) decision table
     */
   def deleteDecisions(delIds: DataFrame, dir: String): DataFrame = {
-    import graft.core.Materialize.MatOps
     val spark = delIds.sparkSession
     val base = ensureDecisions(spark, dir)
-    val del = delIds.select("doc_id").distinct()
-    val merged = tombstones(spark, base)
-      .map(_.select("doc_id").unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true) // pin before overwriting what it read
-    merged.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tombstonesPath(base))
-    graft.dedup.MinhashIndexStore.deleteFromIndex(del, s"$base/mh")
+    graft.dedup.MinhashIndexStore.deleteFromIndex(delIds, s"$base/mh")
+    tombstones(base).merge(delIds)
     decisionTable(spark, dir)
   }
 
@@ -280,20 +243,10 @@ object DecisionStore {
   def compactDecisions(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Materialize.MatOps
     val base = ensureDecisions(spark, dir)
-    tombstones(spark, base).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(base),
-        s"$base/decisions", "doc_id", Buckets)
-      val liveRows = spark.table(tableName(base))
-        .join(org.apache.spark.sql.functions.broadcast(t.select("doc_id")),
-          Seq("doc_id"), "left_anti")
+    tombstones(base).compact(spark) { t =>
+      val liveRows = tombstones(base).hide(decisions(base).physical(spark), Some(t))
         .materializeOnce(eager = true) // pin before the overwrite
-      Sinks.writeBucketed(liveRows, tableName(base), "doc_id",
-        Buckets, Some(s"$base/decisions"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(base)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(base)), true)
+      decisions(base).overwrite(liveRows)
     }
     graft.dedup.MinhashIndexStore.compactIndex(spark, s"$base/mh")
     decisionTable(spark, dir)
@@ -312,30 +265,18 @@ object DecisionStore {
     * id↔content immutability is the append contract (to change a doc,
     * delete its id and crawl it under a new one).
     *
-    * Deletes run FIRST so a same-cycle replacement (old id out, new id
-    * in) never has both visible; both halves are idempotent, so a
-    * replayed cycle is a no-op. Plan shape: two narrow id anti-joins
-    * (table side bucket-scanned) decide the classes; the batch-sized
-    * gate scans and O(deleted) tombstone writes do the rest — the
-    * upstream corpus text is scanned once, by the gates, for new docs
-    * only.
+    * The kernel's crawl diff classifies against the live decision
+    * table (table side bucket-scanned) and applies the deletes first;
+    * the batch-sized gate scans and O(deleted) tombstone writes do the
+    * rest — the upstream corpus text is scanned once, by the gates, for
+    * new docs only. A replayed cycle is a no-op.
     *
     * @return (n_new appended candidates, n_deleted tombstoned rows)
     */
   def crawlSync(spark: SparkSession, dir: String,
       upstream: DataFrame): (Long, Long) = {
-    import graft.core.Materialize.MatOps
-    import org.apache.spark.sql.functions.col
-    val table = decisionTable(spark, dir)
-    val upIds = upstream.select("doc_id").materializeOnce()
-    val deleted = table.select("doc_id")
-      .join(upIds, Seq("doc_id"), "left_anti")
-      .materializeOnce(eager = true) // pin before the table is mutated
-    val newIds = upIds
-      .join(table.select("doc_id"), Seq("doc_id"), "left_anti")
-      .materializeOnce(eager = true)
-    val nDeleted = deleted.count()
-    if (nDeleted > 0) deleteDecisions(deleted, dir)
+    val (newIds, nDeleted) = IndexScratch.CrawlDiff(
+      decisionTable(spark, dir), upstream, "doc_id")(deleteDecisions(_, dir))
     val added = upstream.join(newIds, "doc_id")
     val nNew =
       if (newIds.count() > 0) {

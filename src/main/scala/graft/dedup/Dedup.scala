@@ -360,7 +360,7 @@ object Dedup {
     *
     * Layout (v2): the SYMMETRIC neighbour frame `(doc_id, nbr, inter,
     * uni)` — each pair in both directions — BUCKETED by `doc_id`
-    * (`Sinks.writeBucketed`, the `sync_diff_bucketed` pattern). Every
+    * (a store-kernel part, the `sync_diff_bucketed` pattern). Every
     * consumer's first move is doc-keyed: CC round 0's min-neighbour
     * aggregation, the survivor maps, the threshold table's per-doc
     * max. Against the old plain one-direction parquet each of them
@@ -385,29 +385,21 @@ object Dedup {
         // without it every upstream partition writes its own sliver of
         // every bucket and the table fragments into writers × buckets
         // small files (measured: a 2× slower scan from footer overhead)
-        .repartition(PairBuckets, col("doc_id"))
-      graft.sinks.Sinks.writeBucketed(sym, pairsTable(base), "doc_id",
-        PairBuckets, Some(s"$base/pairs_sym"))
+        .repartition(graft.core.IndexScratch.Buckets, col("doc_id"))
+      pairsSym(base).overwrite(sym)
     }
     base
   }
 
-  private val PairBuckets = 32
-
-  private def pairsTable(base: String): String =
-    "graft_idx_" + graft.core.IndexScratch.md5hex(base).take(10) + "_mhpairs"
+  private def pairsSym(base: String) =
+    graft.core.IndexScratch.Part(base, "pairs_sym", "doc_id")
 
   /** The cached [[ensureVerifiedPairs]] graph as the bucketed SYMMETRIC
     * frame `(doc_id, nbr, inter, uni)` — reads through the restored
     * catalog entry so doc-keyed aggregations stay exchange-free.
     */
-  def verifiedPairsSymCached(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureVerifiedPairs(spark, dir)
-    graft.sinks.Sinks.restoreBucketed(spark, pairsTable(base),
-      s"$base/pairs_sym", "doc_id", PairBuckets)
-    spark.catalog.refreshTable(pairsTable(base))
-    spark.table(pairsTable(base))
-  }
+  def verifiedPairsSymCached(spark: SparkSession, dir: String): DataFrame =
+    pairsSym(ensureVerifiedPairs(spark, dir)).physical(spark)
 
   /** The cached graph as the classic one-direction pair view
     * `(doc_a < doc_b, inter, uni)` — each pair exactly once.

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.Materialize.MatOps
 import graft.core.{Decisions, Tables}
 import graft.functions.GraftFunctions
+import graft.core.IndexScratch
 import graft.core.IndexScratch.{ensureBuilt, scratchBase, sourceFingerprint}
-import graft.sinks.Sinks
 
 /** Persisted MinHash dedup index — the between-crawls artifact
   * `Dedup.dedupIncrementalDocs`'s contract has always named ("at 100 TB
@@ -49,10 +49,13 @@ import graft.sinks.Sinks
   */
 object MinhashIndexStore {
 
-  private val Buckets = 32
+  private def sets(basePath: String) = IndexScratch.Part(basePath, "sets", "doc_id")
+  private def banded(basePath: String) = IndexScratch.Part(basePath, "banded", "bucket")
+  private def members(basePath: String) = IndexScratch.Part(basePath, "members", "rep")
+  private def labels(basePath: String) = IndexScratch.Part(basePath, "labels", "cluster")
 
-  private def tableName(basePath: String, part: String): String =
-    "graft_mhidx_" + graft.core.IndexScratch.md5hex(basePath).take(10) + "_" + part
+  /** Tombstoned doc_ids hide members and labels (see [[deleteFromIndex]]). */
+  private def tombstones(basePath: String) = IndexScratch.Tombstones(basePath, "doc_id")
 
   /** Word-token signature sets, sorted for merge-walk verification —
     * identical to `Dedup.dedupIncrementalDocs`'s per-side projection.
@@ -78,7 +81,7 @@ object MinhashIndexStore {
         collect_list(col("doc_id")).as("members"))
   }
 
-  private def banded(sets: DataFrame): DataFrame =
+  private def bandsOf(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"),
       explode(call_function("minhash_band_buckets", col("s"), lit(64))).as("bucket"))
 
@@ -89,15 +92,11 @@ object MinhashIndexStore {
     val spark = docs.sparkSession
     GraftFunctions.register(spark)
     val groups = groupsOf(docs).materializeOnce(eager = true)
-    val sets = groups.select(col("rep").as("doc_id"), col("s"))
-    Sinks.writeBucketed(sets, tableName(basePath, "sets"), "doc_id",
-      Buckets, Some(s"$basePath/sets"))
-    Sinks.writeBucketed(banded(sets), tableName(basePath, "banded"), "bucket",
-      Buckets, Some(s"$basePath/banded"))
-    Sinks.writeBucketed(
-      groups.select(col("rep"), explode(col("members")).as("doc_id")),
-      tableName(basePath, "members"), "rep", Buckets,
-      Some(s"$basePath/members"))
+    val groupSets = groups.select(col("rep").as("doc_id"), col("s"))
+    sets(basePath).overwrite(groupSets)
+    banded(basePath).overwrite(bandsOf(groupSets))
+    members(basePath).overwrite(
+      groups.select(col("rep"), explode(col("members")).as("doc_id")))
   }
 
   /** A new batch at or under `1/SmallBatchDenom` of the indexed corpus
@@ -135,18 +134,38 @@ object MinhashIndexStore {
     * crossover).
     */
   def dedupIncrementalAgainstIndex(newDocs: DataFrame,
-      basePath: String): DataFrame = {
+      basePath: String): DataFrame =
+    gateAgainstIndex(newDocs, basePath, hideBatch = false)
+
+  /** [[dedupIncrementalAgainstIndex]] against the index as it stood
+    * BEFORE the batch: the batch's own ids are hidden from the index
+    * side, so a replay after a crash that already appended the batch
+    * (the `DecisionStore.appendDecisions` order: index first, decision
+    * rows last) recomputes the verdicts of the first attempt. `newDocs`
+    * must be pinned (it is read twice).
+    */
+  private[graft] def dedupBatchAgainstIndex(newDocs: DataFrame,
+      basePath: String): DataFrame =
+    gateAgainstIndex(newDocs, basePath, hideBatch = true)
+
+  private def gateAgainstIndex(newDocs: DataFrame, basePath: String,
+      hideBatch: Boolean): DataFrame = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
     val bGroups = groupsOf(newDocs).materializeOnce(eager = true)
     val pairs = incrementalVerifiedRepPairs(bGroups, basePath)
+    val hidden = tombstones(basePath).read(spark).map(_.select("doc_id"))
+    val hiddenOld =
+      if (!hideBatch) hidden
+      else Some(hidden.fold(newDocs.select("doc_id"))(
+        _.unionByName(newDocs.select("doc_id"))))
     // the gate's output is per-new-doc AGGREGATES, so document pairs
     // never materialize: each matched old group contributes its LIVE
     // member count and min live id (bucket-aligned aggregate over the
     // narrow member map — tombstoned docs drop here, and a group whose
     // members are all dead has no stats row, so the inner join also
     // drops candidates from dead groups)
-    val matches = pairs.join(liveMemberStats(spark, basePath), "orep")
+    val matches = pairs.join(liveMemberStats(spark, basePath, hiddenOld), "orep")
       .groupBy("brep")
       .agg(sum(col("n_old")).as("n_dups"), min(col("min_old")).as("first_dup"))
     bGroups.select(col("rep").as("brep"), explode(col("members")).as("doc_id"))
@@ -158,30 +177,20 @@ object MinhashIndexStore {
     // no global ORDER BY — batch-sized output; the driver compare is order-insensitive
   }
 
-  /** Per-group `(orep, n_old, min_old)` over LIVE members — one
+  /** Per-group `(orep, n_old, min_old)` over members not `hidden` — one
     * exchange-free aggregate off the rep-bucketed member map.
     */
-  private def liveMemberStats(spark: SparkSession,
-      basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "members"),
-      s"$basePath/members", "rep", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "members"))
-    live(spark.table(tableName(basePath, "members")),
-        tombstones(spark, basePath))
+  private def liveMemberStats(spark: SparkSession, basePath: String,
+      hidden: Option[DataFrame]): DataFrame = {
+    tombstones(basePath).hide(members(basePath).physical(spark), hidden)
       .groupBy("rep")
       .agg(count(lit(1)).as("n_old"), min(col("doc_id")).as("min_old"))
       .withColumnRenamed("rep", "orep")
   }
 
   /** LIVE `(rep, doc_id)` member rows. */
-  private def liveMembers(spark: SparkSession,
-      basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "members"),
-      s"$basePath/members", "rep", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "members"))
-    live(spark.table(tableName(basePath, "members")),
-      tombstones(spark, basePath))
-  }
+  private def liveMembers(spark: SparkSession, basePath: String): DataFrame =
+    tombstones(basePath).live(members(basePath).physical(spark))
 
   /** The verified Jaccard ≥ 0.5 batch-group × index-group pair set
     * `(brep, orep)` behind [[dedupIncrementalAgainstIndex]] — every
@@ -193,15 +202,8 @@ object MinhashIndexStore {
   private def incrementalVerifiedRepPairs(bGroups: DataFrame,
       basePath: String): DataFrame = {
     val spark = bGroups.sparkSession
-    Sinks.restoreBucketed(spark, tableName(basePath, "sets"),
-      s"$basePath/sets", "doc_id", Buckets)
-    Sinks.restoreBucketed(spark, tableName(basePath, "banded"),
-      s"$basePath/banded", "bucket", Buckets)
-    // fresh listings: appends can arrive from another session
-    spark.catalog.refreshTable(tableName(basePath, "sets"))
-    spark.catalog.refreshTable(tableName(basePath, "banded"))
-    val oldSets = spark.table(tableName(basePath, "sets"))
-    val oldBanded = spark.table(tableName(basePath, "banded"))
+    val oldSets = sets(basePath).physical(spark)
+    val oldBanded = banded(basePath).physical(spark)
     // narrow view of the caller's pinned batch groups
     val newSets = bGroups.select(col("rep").as("doc_id"), col("s"))
 
@@ -213,7 +215,7 @@ object MinhashIndexStore {
     if (nNew * SmallBatchDenom <= nOld) {
       // bipartite candidates: any (new, old) GROUP pair sharing any
       // band bucket, scored once — zero self-side work
-      val cands = broadcast(banded(newSets).withColumnRenamed("doc_id", "brep"))
+      val cands = broadcast(bandsOf(newSets).withColumnRenamed("doc_id", "brep"))
         .join(oldBanded.withColumnRenamed("doc_id", "orep"), "bucket")
         .select("brep", "orep")
         .distinct()
@@ -230,7 +232,7 @@ object MinhashIndexStore {
       val sets = newSets.withColumn("is_new", lit(true))
         .unionByName(oldSets.withColumn("is_new", lit(false)))
         .materializeOnce()
-      val bandedAll = banded(newSets)
+      val bandedAll = bandsOf(newSets)
         .unionByName(oldBanded)
         .materializeOnce()
       Dedup.adaptivePairs(sets, bandedAll)
@@ -273,68 +275,32 @@ object MinhashIndexStore {
     * signatures and band buckets append into the bucketed tables, so a
     * later `dedupIncrementalAgainstIndex` sees earlier batches as
     * indexed corpus. Banding is per-doc (no frozen model can drift),
-    * so an appended index equals one rebuilt over the union.
-    *
-    * Append is IDEMPOTENT by doc_id: each table takes only ids it
-    * doesn't already hold (narrow anti-join, pinned before the write),
-    * so replays repair a partial failure instead of duplicating rows.
+    * so an appended index equals one rebuilt over the union. Each part
+    * is guarded by doc_id on its own (the kernel's replay contract).
     */
   def appendToIndex(newDocs: DataFrame, basePath: String): Unit = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
-    Seq(("sets", "doc_id"), ("banded", "bucket"), ("members", "rep"))
-      .foreach { case (part, key) =>
-        Sinks.restoreBucketed(spark, tableName(basePath, part),
-          s"$basePath/$part", key, Buckets)
-        // fresh listings for the insert-only guards: a stale relation
-        // cache (appends from another session) would double-insert
-        spark.catalog.refreshTable(tableName(basePath, part))
-      }
-    // each table's rows derive from the FULL batch with an INDEPENDENT
-    // guard — a replay after a crash between any two appends repairs
-    // the missing halves even though the landed tables filter theirs
-    // away (the per-table independence of SearchIndexStore.upsertDocs /
-    // VectorIndexStore.appendIvfPq). Group reps are batch-min ids, so
-    // a replay recomputes identical groups.
+    val physSets = sets(basePath).physical(spark)
+    val physBanded = banded(basePath).physical(spark)
+    val physMembers = members(basePath).physical(spark)
+    // group reps are batch-min ids, so a replay recomputes identical groups
     val batchGroups = groupsOf(newDocs).materializeOnce(eager = true)
     val batchSets = batchGroups.select(col("rep").as("doc_id"), col("s"))
-    val sets = batchSets
-      .join(spark.table(tableName(basePath, "sets")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
+    val newSets = batchSets
+      .join(physSets.select("doc_id"), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true) // pin all three before the first write
-    val bands = banded(batchSets)
-      .join(spark.table(tableName(basePath, "banded"))
-        .select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+    val bands = bandsOf(batchSets)
+      .join(physBanded.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     val mems = batchGroups
       .select(col("rep"), explode(col("members")).as("doc_id"))
-      .join(spark.table(tableName(basePath, "members")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
+      .join(physMembers.select("doc_id"), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
-    Sinks.appendBucketed(sets, tableName(basePath, "sets"), "doc_id", Buckets)
-    Sinks.appendBucketed(bands, tableName(basePath, "banded"), "bucket", Buckets)
-    Sinks.appendBucketed(mems, tableName(basePath, "members"), "rep", Buckets)
+    sets(basePath).append(newSets)
+    banded(basePath).append(bands)
+    members(basePath).append(mems)
   }
-
-  // --- tombstone deletes (the vector store's protocol, dedup side) ----
-
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  /** The tombstoned doc_ids, if any delete ever ran on this index. */
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (graft.core.IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** Hide tombstoned rows from an index frame. The tombstone set is
-    * delete-batch-sized, so the anti-join broadcasts and the streamed
-    * (bucketed) side keeps its exchange-free partitioning.
-    */
-  private def live(df: DataFrame, tomb: Option[DataFrame]): DataFrame =
-    tomb.map(t => df.join(broadcast(t.select("doc_id")),
-      Seq("doc_id"), "left_anti")).getOrElse(df)
 
   /** Delete docs from a persisted dedup index by TOMBSTONE — the
     * between-crawls removal move (`VectorIndexStore.deleteIvfPq`'s
@@ -349,22 +315,9 @@ object MinhashIndexStore {
     * reconciliation is the next fingerprint-triggered rebuild's job,
     * the `DecisionStore.appendDecisions` contract in reverse).
     *
-    * Deletes are idempotent (id-set union) and unknown ids are no-ops.
-    * A deleted id stays deleted even if re-appended (`appendToIndex`
-    * keys on physical rows); compact first to resurrect.
     */
-  def deleteFromIndex(delIds: DataFrame, basePath: String): Unit = {
-    val spark = delIds.sparkSession
-    val del = delIds.select("doc_id").distinct()
-    // pin before overwriting the path the merge just read
-    val merged = tombstones(spark, basePath)
-      .map(_.select("doc_id").unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true)
-    merged.coalesce(1).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-  }
+  def deleteFromIndex(delIds: DataFrame, basePath: String): Unit =
+    tombstones(basePath).merge(delIds)
 
   /** Fold tombstones into the BAND index's physical tables (one
     * bucketed overwrite each — linear in the index, a separate
@@ -372,41 +325,26 @@ object MinhashIndexStore {
     * the tombstone set; afterwards deleted ids are physically absent
     * and can re-append.
     */
-  def compactIndex(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Seq(("sets", "doc_id"), ("banded", "bucket"), ("members", "rep"))
-        .foreach { case (part, key) =>
-          Sinks.restoreBucketed(spark, tableName(basePath, part),
-            s"$basePath/$part", key, Buckets)
-          spark.catalog.refreshTable(tableName(basePath, part))
-        }
+  def compactIndex(spark: SparkSession, basePath: String): Unit =
+    tombstones(basePath).compact(spark) { t =>
       // pin the survivors before overwriting the tables they read:
       // member rows drop by tombstone, and groups left with ZERO live
       // members lose their set/band rows too (so their docs can
       // re-append as fresh groups — rep ids are batch-min ids, which a
       // post-compact re-append may mint anew for the same set)
-      val mems = live(spark.table(tableName(basePath, "members")), Some(t))
+      val mems = tombstones(basePath).hide(members(basePath).physical(spark), Some(t))
         .materializeOnce(eager = true)
       val liveReps = mems.select(col("rep").as("doc_id")).distinct()
-      val sets = spark.table(tableName(basePath, "sets"))
+      val liveSets = sets(basePath).physical(spark)
         .join(liveReps, Seq("doc_id"), "left_semi")
         .materializeOnce(eager = true)
-      val bands = spark.table(tableName(basePath, "banded"))
+      val bands = banded(basePath).physical(spark)
         .join(liveReps, Seq("doc_id"), "left_semi")
         .materializeOnce(eager = true)
-      Sinks.writeBucketed(sets, tableName(basePath, "sets"), "doc_id",
-        Buckets, Some(s"$basePath/sets"))
-      Sinks.writeBucketed(bands, tableName(basePath, "banded"), "bucket",
-        Buckets, Some(s"$basePath/banded"))
-      Sinks.writeBucketed(mems, tableName(basePath, "members"), "rep",
-        Buckets, Some(s"$basePath/members"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
+      sets(basePath).overwrite(liveSets)
+      banded(basePath).overwrite(bands)
+      members(basePath).overwrite(mems)
     }
-  }
 
   /** [[buildClusterLabels]] over an arbitrary `(doc_id, text)` frame —
     * the docs-shaped form the incremental entry builds its crawl-1
@@ -415,16 +353,15 @@ object MinhashIndexStore {
   def buildClusterLabelsDocs(docs: DataFrame, basePath: String): Unit = {
     val spark = docs.sparkSession
     GraftFunctions.register(spark)
-    val sets = docs.select(col("doc_id"),
+    val docSets = docs.select(col("doc_id"),
       expr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t))").as("s"))
-    val labels = Components.minLabels(
-      Dedup.minhashVerifiedPairs(sets)
+    val lbls = Components.minLabels(
+      Dedup.minhashVerifiedPairs(docSets)
         .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     val spine = docs.select("doc_id")
-      .join(labels, Seq("doc_id"), "left")
+      .join(lbls, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster"))
-    Sinks.writeBucketed(spine, tableName(basePath, "labels"), "cluster",
-      Buckets, Some(s"$basePath/labels"))
+    labels(basePath).overwrite(spine)
   }
 
   /** The crawl-1 size for [[dedupClusterIncremental]]'s demonstration
@@ -472,21 +409,12 @@ object MinhashIndexStore {
     * tombstoned members, drop the set. Survivor/size derivation happens
     * at load, so query results are unchanged by compaction.
     */
-  def compactLabels(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(basePath, "labels"),
-        s"$basePath/labels", "cluster", Buckets)
-      val labels = live(spark.table(tableName(basePath, "labels")), Some(t))
-        .materializeOnce(eager = true)
-      Sinks.writeBucketed(labels, tableName(basePath, "labels"), "cluster",
-        Buckets, Some(s"$basePath/labels"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
+  def compactLabels(spark: SparkSession, basePath: String): Unit =
+    tombstones(basePath).compact(spark) { t =>
+      labels(basePath).overwrite(
+        tombstones(basePath).hide(labels(basePath).physical(spark), Some(t))
+          .materializeOnce(eager = true))
     }
-  }
 
   /** Incrementally assign a NEW document batch to clusters and append
     * the `(doc_id, cluster)` rows to a persisted LABEL index — the
@@ -522,20 +450,16 @@ object MinhashIndexStore {
       bandBase: String): Unit = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
-    Sinks.restoreBucketed(spark, tableName(labelBase, "labels"),
-      s"$labelBase/labels", "cluster", Buckets)
-    spark.catalog.refreshTable(tableName(labelBase, "labels"))
+    val physLabels = labels(labelBase).physical(spark)
     // insert-only guard keys on PHYSICAL rows (the append contract)
     val batch = newDocs.select("doc_id", "text")
-      .join(spark.table(tableName(labelBase, "labels")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
+      .join(physLabels.select("doc_id"), Seq("doc_id"), "left_anti")
       .materializeOnce(eager = true)
     val bGroups = groupsOf(batch).materializeOnce(eager = true)
     // batch ↔ existing-cluster edges: matched old ids resolve to their
     // cluster labels (labels table read LIVE so tombstoned members
     // cannot pull a batch doc into a dead cluster)
-    val oldLabels = live(spark.table(tableName(labelBase, "labels")),
-      tombstones(spark, labelBase))
+    val oldLabels = tombstones(labelBase).live(physLabels)
     val toClusters = incrementalVerifiedDocPairs(bGroups, bandBase)
       .join(oldLabels.withColumnRenamed("doc_id", "old_id"), "old_id")
       .select(col("new_id").as("src"), col("cluster").as("dst"))
@@ -549,8 +473,7 @@ object MinhashIndexStore {
       .select(col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("cluster"))
       .materializeOnce(eager = true) // pin before writing the table read above
-    Sinks.appendBucketed(assigned, tableName(labelBase, "labels"),
-      "cluster", Buckets)
+    labels(labelBase).append(assigned)
   }
 
   /** Ensure the corpus band index exists and is fresh at the
@@ -588,10 +511,7 @@ object MinhashIndexStore {
     */
   def mhindexStats(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val base = ensureMinhashIndex(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base, "banded"),
-      s"$base/banded", "bucket", Buckets)
-    spark.table(tableName(base, "banded"))
+    banded(ensureMinhashIndex(spark, dir)).physical(spark)
       .groupBy("bucket").agg(count(lit(1)).as("bucket_size"))
       .groupBy("bucket_size")
       .agg(count(lit(1)).as("n_buckets"))
@@ -624,12 +544,11 @@ object MinhashIndexStore {
     * corpus regeneration rebuilds automatically.
     */
   def buildClusterLabels(spark: SparkSession, dir: String, basePath: String): Unit = {
-    val labels = Dedup.dedupCluster(spark, dir).select("doc_id", "cluster")
     // bucketed by CLUSTER: the derived computations (cluster sizes, the
     // size join, survivor selection) all key on the label, so they read
     // bucket-aligned and plan zero shuffles
-    Sinks.writeBucketed(labels, tableName(basePath, "labels"), "cluster",
-      Buckets, Some(s"$basePath/labels"))
+    labels(basePath).overwrite(
+      Dedup.dedupCluster(spark, dir).select("doc_id", "cluster"))
   }
 
   /** `Dedup.dedupCluster` served from the persisted label index —
@@ -658,14 +577,10 @@ object MinhashIndexStore {
     * (the oracle-gated path never has tombstones).
     */
   def clusterFromLabels(spark: SparkSession, basePath: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, "labels"),
-      s"$basePath/labels", "cluster", Buckets)
-    spark.catalog.refreshTable(tableName(basePath, "labels"))
-    val labels = live(spark.table(tableName(basePath, "labels")),
-      tombstones(spark, basePath))
-    val sizes = labels.groupBy("cluster")
+    val live = tombstones(basePath).live(labels(basePath).physical(spark))
+    val sizes = live.groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size"), min(col("doc_id")).as("surv"))
-    labels
+    live
       .join(sizes, "cluster")
       .select(col("doc_id"), col("cluster"), col("cluster_size"),
         (col("doc_id") === col("surv")).cast("int").as("keep"))
@@ -684,10 +599,7 @@ object MinhashIndexStore {
     */
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureClusterLabels(spark, dir)
-    Sinks.restoreBucketed(spark, tableName(base, "labels"),
-      s"$base/labels", "cluster", Buckets)
-    val hist = live(spark.table(tableName(base, "labels")),
-        tombstones(spark, base))
+    val hist = tombstones(base).live(labels(base).physical(spark))
       .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),

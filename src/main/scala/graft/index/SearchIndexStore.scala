@@ -1,11 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{IndexScratch, Tables}
 import graft.core.Materialize.MatOps
-import graft.sinks.Sinks
 import graft.text.Relevance
 
 /** Persisted, incrementally-maintained SEARCH index — the store the
@@ -41,23 +40,23 @@ import graft.text.Relevance
   * `max(physical gen) + 1`. Reads hide dead generations via one
   * broadcast anti-ish join; [[compact]] folds them out physically.
   *
-  * Crash ordering: the dead-map write lands BEFORE the appends, so a
-  * mid-upsert crash leaves the affected documents temporarily absent
-  * (repaired by replaying the batch) rather than visible TWICE — the
-  * same deletes-first choice as `DecisionStore.crawlSync`; for a
-  * search index a missing doc is a recall blip, a duplicated doc is a
-  * ranking corruption. Appends are guarded per `(doc_id, gen)` against
-  * the physical tables, so replays repair partial failures instead of
-  * duplicating rows, and an upsert whose live `text_hash` already
+  * Both parts and the `meta` commit point follow the kernel's
+  * replay contract (`IndexScratch`); the dead map is this store's own
+  * delete-first write: it lands BEFORE the appends, so a mid-upsert
+  * crash leaves the affected documents temporarily absent rather than
+  * visible TWICE — for a search index a missing doc is a recall blip, a
+  * duplicated doc is a ranking corruption. Appends are guarded per
+  * `(doc_id, gen)`, and an upsert whose live `text_hash` already
   * matches is a no-op — which is also precisely the reference's
   * revision compare (only reprocess documents whose revision moved).
   */
 object SearchIndexStore {
 
-  private val Buckets = 32
+  private def postings(basePath: String): IndexScratch.Part =
+    IndexScratch.Part(basePath, "postings", "token")
 
-  private def tableName(basePath: String, part: String): String =
-    "graft_sidx_" + IndexScratch.md5hex(basePath).take(10) + "_" + part
+  private def docstats(basePath: String): IndexScratch.Part =
+    IndexScratch.Part(basePath, "docstats", "doc_id")
 
   private def deadPath(basePath: String): String = s"$basePath/dead"
 
@@ -82,26 +81,10 @@ object SearchIndexStore {
   def build(docs: DataFrame, basePath: String): Unit = {
     val spark = docs.sparkSession
     val d = docs.select(col("doc_id"), col("text"), lit(0).as("gen"))
-    Sinks.writeBucketed(postingsOf(d), tableName(basePath, "postings"),
-      "token", Buckets, Some(s"$basePath/postings"))
-    Sinks.writeBucketed(statsOf(d), tableName(basePath, "docstats"),
-      "doc_id", Buckets, Some(s"$basePath/docstats"))
-    dropDead(spark, basePath)
-    writeMetaRecount(spark, basePath)
-  }
-
-  /** The PHYSICAL bucketed table for an index part — dead generations
-    * included. Mutation guards key on physical rows (what duplicates);
-    * query paths go through the live view. Fresh listing per call: a
-    * streaming gate's foreachBatch clone may append from another
-    * session and a stale relation cache would hide its rows.
-    */
-  private def physical(spark: SparkSession, basePath: String,
-      part: String, keyCol: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, part),
-      s"$basePath/$part", keyCol, Buckets)
-    spark.catalog.refreshTable(tableName(basePath, part))
-    spark.table(tableName(basePath, part))
+    postings(basePath).overwrite(postingsOf(d))
+    docstats(basePath).overwrite(statsOf(d))
+    IndexScratch.deletePath(spark, deadPath(basePath))
+    recountMeta(spark, basePath)
   }
 
   private def deadMap(spark: SparkSession,
@@ -121,47 +104,30 @@ object SearchIndexStore {
     }.getOrElse(df)
 
   def loadPostings(spark: SparkSession, basePath: String): DataFrame =
-    liveView(physical(spark, basePath, "postings", "token"),
-      deadMap(spark, basePath))
+    liveView(postings(basePath).physical(spark), deadMap(spark, basePath))
 
   def loadDocStats(spark: SparkSession, basePath: String): DataFrame =
-    liveView(physical(spark, basePath, "docstats", "doc_id"),
-      deadMap(spark, basePath))
+    liveView(docstats(basePath).physical(spark), deadMap(spark, basePath))
 
-  private def writeDead(spark: SparkSession, basePath: String,
-      merged: DataFrame): Unit =
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(deadPath(basePath))
-
-  private def dropDead(spark: SparkSession, basePath: String): Unit =
-    if (IndexScratch.pathExists(spark, deadPath(basePath))) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(deadPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(deadPath(basePath)), true)
-    }
-
-  private def writeMetaRecount(spark: SparkSession, basePath: String): Unit = {
-    import spark.implicits._
-    val liveStats = loadDocStats(spark, basePath)
+  /** `(n_docs, total_tokens)` of the live corpus. */
+  private def corpusStats(spark: SparkSession, basePath: String): DataFrame =
+    loadDocStats(spark, basePath)
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"))
-      .head()
-    Seq((liveStats.getLong(0), liveStats.getLong(1)))
-      .toDF("n_docs", "total_tokens").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
+
+  /** The commit point of every mutation: `meta` recounted from LIVE rows. */
+  private def recountMeta(spark: SparkSession, basePath: String): Unit = {
+    val live = corpusStats(spark, basePath).head()
+    IndexScratch.writeMeta(spark, basePath,
+      "n_docs" -> live.getLong(0), "total_tokens" -> live.getLong(1))
   }
 
-  /** `(n_docs, total_tokens)` of the live corpus; indexes written
-    * before the meta existed fall back to one recount per load.
+  /** `meta`; indexes written before the meta existed fall back to one
+    * recount per load.
     */
   private def readMeta(spark: SparkSession, basePath: String): DataFrame =
-    if (IndexScratch.pathExists(spark, s"$basePath/meta"))
-      spark.read.parquet(s"$basePath/meta")
-    else
-      loadDocStats(spark, basePath)
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"))
+    IndexScratch.readMeta(spark, basePath)
+      .getOrElse(corpusStats(spark, basePath))
 
   /** UPSERT a `(doc_id, text)` batch — new documents at gen 0, changed
     * documents at `max(physical gen) + 1` with every older generation
@@ -183,7 +149,7 @@ object SearchIndexStore {
     // physical + live docstats rows for the batch ids only (no
     // broadcast hint on bIds: a corpus-wide sync passes every id and
     // AQE should then shuffle the id side against the bucketed spine)
-    val physB = physical(spark, basePath, "docstats", "doc_id")
+    val physB = docstats(basePath).physical(spark)
       .join(bIds, Seq("doc_id"))
       .select("doc_id", "gen", "text_hash")
       .materializeOnce(eager = true)
@@ -201,7 +167,7 @@ object SearchIndexStore {
     // that occupied gen for different content would let the (doc_id,
     // gen) guard drop the new postings while the docstats row lands —
     // the index would serve the crashed batch's postings forever
-    val physPostPairs = physical(spark, basePath, "postings", "token")
+    val physPostPairs = postings(basePath).physical(spark)
       .join(broadcast(changed.select("doc_id")), Seq("doc_id"))
       .select("doc_id", "gen").distinct()
       .materializeOnce(eager = true)
@@ -221,7 +187,7 @@ object SearchIndexStore {
       // full replay seeing no effective mutation — recount here so the
       // replay still repairs meta (the BM25 corpus factors); one cheap
       // aggregate over live docstats
-      writeMetaRecount(spark, basePath)
+      recountMeta(spark, basePath)
       return (0L, 0L)
     }
     // 1) dead FIRST (see object doc: absent beats duplicated) — every
@@ -232,7 +198,7 @@ object SearchIndexStore {
       val merged = dead0.map(_.unionByName(newDead)).getOrElse(newDead)
         .groupBy("doc_id").agg(max("dead_gen").as("dead_gen"))
         .materializeOnce(eager = true) // pin before overwriting the source
-      writeDead(spark, basePath, merged)
+      IndexScratch.overwriteSmall(merged, deadPath(basePath))
     }
     // 2) appends, each guarded per (doc_id, gen) against its PHYSICAL
     //    table so a replayed batch repairs a partial failure
@@ -240,18 +206,16 @@ object SearchIndexStore {
     // physPostPairs (physical postings ∩ batch's changed ids) doubles
     // as the per-(doc_id, gen) replay guard — planned ids ARE changed
     // ids, so no second postings scan
-    Sinks.appendBucketed(
+    postings(basePath).append(
       postingsOf(toProcess)
         .join(physPostPairs, Seq("doc_id", "gen"), "left_anti")
-        .materializeOnce(eager = true),
-      tableName(basePath, "postings"), "token", Buckets)
+        .materializeOnce(eager = true))
     val physStatPairs = physB.select("doc_id", "gen").distinct()
-    Sinks.appendBucketed(
+    docstats(basePath).append(
       statsOf(toProcess)
         .join(physStatPairs, Seq("doc_id", "gen"), "left_anti")
-        .materializeOnce(eager = true),
-      tableName(basePath, "docstats"), "doc_id", Buckets)
-    writeMetaRecount(spark, basePath)
+        .materializeOnce(eager = true))
+    recountMeta(spark, basePath)
     (nNew, nChanged)
   }
 
@@ -263,9 +227,9 @@ object SearchIndexStore {
   def deleteDocs(ids: DataFrame, basePath: String): Unit = {
     val spark = ids.sparkSession
     val del = ids.select("doc_id").distinct().materializeOnce(eager = true)
-    val gens = physical(spark, basePath, "docstats", "doc_id")
+    val gens = docstats(basePath).physical(spark)
       .select("doc_id", "gen")
-      .unionByName(physical(spark, basePath, "postings", "token")
+      .unionByName(postings(basePath).physical(spark)
         .select("doc_id", "gen"))
       .join(broadcast(del), Seq("doc_id"))
       .groupBy("doc_id").agg(max("gen").as("dead_gen"))
@@ -273,8 +237,8 @@ object SearchIndexStore {
       .map(_.unionByName(gens)).getOrElse(gens)
       .groupBy("doc_id").agg(max("dead_gen").as("dead_gen"))
       .materializeOnce(eager = true) // pin before overwriting the source
-    writeDead(spark, basePath, merged)
-    writeMetaRecount(spark, basePath)
+    IndexScratch.overwriteSmall(merged, deadPath(basePath))
+    recountMeta(spark, basePath)
   }
 
   /** Fold the dead map into the physical tables (one bucketed
@@ -286,34 +250,27 @@ object SearchIndexStore {
     deadMap(spark, basePath).foreach { _ =>
       val p = loadPostings(spark, basePath).materializeOnce(eager = true)
       val s = loadDocStats(spark, basePath).materializeOnce(eager = true)
-      Sinks.writeBucketed(p, tableName(basePath, "postings"), "token",
-        Buckets, Some(s"$basePath/postings"))
-      Sinks.writeBucketed(s, tableName(basePath, "docstats"), "doc_id",
-        Buckets, Some(s"$basePath/docstats"))
-      dropDead(spark, basePath)
-      writeMetaRecount(spark, basePath)
+      postings(basePath).overwrite(p)
+      docstats(basePath).overwrite(s)
+      IndexScratch.deletePath(spark, deadPath(basePath))
+      recountMeta(spark, basePath)
     }
 
   /** One CRAWL-SYNC cycle — the reference's diff loop applied to the
     * search index itself (sync_service.rs:104-163: new / changed /
-    * deleted): live ids absent upstream are deleted first (same-cycle
-    * replacement safe), then the whole upstream runs through
-    * [[upsertDocs]], whose `text_hash` compare touches only documents
-    * that actually changed — the revision check that lets a 100 TB
-    * corpus sync for the cost of its delta. Replayed cycles return
-    * `(0, 0, 0)`.
+    * deleted): the kernel's crawl-diff deletes live ids absent upstream
+    * first, then the whole upstream runs through [[upsertDocs]], whose
+    * `text_hash` compare touches only documents that actually changed —
+    * the revision check that lets a 100 TB corpus sync for the cost of
+    * its delta. Replayed cycles return `(0, 0, 0)`.
     *
     * @return (n_new, n_changed, n_deleted)
     */
   def searchSync(upstream: DataFrame, basePath: String): (Long, Long, Long) = {
-    val spark = upstream.sparkSession
     val up = upstream.select(col("doc_id"), col("text"))
-    val upIds = up.select("doc_id").materializeOnce()
-    val deleted = loadDocStats(spark, basePath).select("doc_id")
-      .join(upIds, Seq("doc_id"), "left_anti")
-      .materializeOnce(eager = true) // pin before the store is mutated
-    val nDeleted = deleted.count()
-    if (nDeleted > 0) deleteDocs(deleted, basePath)
+    val nDeleted = IndexScratch.CrawlDiff.deletesFirst(
+      loadDocStats(upstream.sparkSession, basePath),
+      up.select("doc_id").materializeOnce(), "doc_id")(deleteDocs(_, basePath))
     val (nNew, nChanged) = upsertDocs(up, basePath)
     (nNew, nChanged, nDeleted)
   }

@@ -26,21 +26,17 @@ import graft.sinks.Sinks
   *    `(doc_id, off, chunk_bytes, chunk_md5)` — what reassembles a
   *    blob from the store (plain parquet, appended per batch,
   *    id-guarded).
-  *  - `meta/`: the max indexed doc_id — the monotone-crawl commit
-  *    point ([[SpanIndexStore]]'s guard).
-  *  - `tombstones/`: deleted doc_ids, if any delete ever ran — the
-  *    live manifest view anti-joins them away (the
-  *    `VectorIndexStore.deleteIvfPq` move: a delete writes O(deleted
-  *    ids), never O(store)).
+  *  - `meta/`: the kernel's high-water mark (`IndexScratch.HighWater`),
+  *    the batch commit point.
+  *  - `tombstones/`: the kernel's deleted-id set, if any delete ever
+  *    ran — the live manifest view hides those documents (a delete
+  *    writes O(deleted ids), never O(store)).
   *
-  * Replay safety for at-least-once delivery: chunk rows are
-  * digest-deduped against the PHYSICAL store (a replayed half can
-  * never double-insert a digest), manifest rows are doc_id-guarded,
-  * and the meta write is the commit point (written last) — so a crash
-  * between writes repairs on retry instead of duplicating. Appending a
-  * batch then reading equals rebuilding over the union bit-for-bit
-  * (chunk boundaries are position-local functions of each document —
-  * the CDC property — so batch composition cannot change any chunk;
+  * Chunk rows are digest-deduped against the PHYSICAL store, so a
+  * replayed half never double-inserts a digest. Appending a batch then
+  * reading equals rebuilding over the union bit-for-bit (chunk
+  * boundaries are position-local functions of each document — the CDC
+  * property — so batch composition cannot change any chunk;
   * spec-pinned).
   *
   * Scale shape: per batch, only the batch's text is chunked (one
@@ -52,16 +48,11 @@ import graft.sinks.Sinks
   */
 object ChunkStore {
 
-  private val Buckets = 32
+  private def chunks(basePath: String): IndexScratch.Part =
+    IndexScratch.Part(basePath, "chunks", "chunk_md5")
 
-  private def tableName(basePath: String): String =
-    "graft_idx_" + IndexScratch.md5hex(basePath).take(10) + "_chunks"
-
-  private def writeMeta(spark: SparkSession, basePath: String, maxDoc: Long): Unit = {
-    import spark.implicits._
-    Seq(maxDoc).toDF("max_doc").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
-  }
+  private def tombstones(basePath: String): IndexScratch.Tombstones =
+    IndexScratch.Tombstones(basePath, "doc_id")
 
   /** CDC chunk rows of a doc frame — ONE definition with the full-scan
     * entries (`Multimodal.cdcChunksOf`), so the store can never drift
@@ -78,120 +69,71 @@ object ChunkStore {
 
   /** Initial build over the first crawl. */
   def buildChunkStore(docs: DataFrame, basePath: String): Unit = {
-    val spark = docs.sparkSession
     val d = docs.select("doc_id", "text").materializeOnce()
     val ch = chunksOf(d).materializeOnce()
-    Sinks.writeBucketed(digestRows(ch), tableName(basePath), "chunk_md5",
-      Buckets, Some(s"$basePath/chunks"))
+    chunks(basePath).overwrite(digestRows(ch))
     ch.select("doc_id", "off", "chunk_bytes", "chunk_md5")
       .write.mode(SaveMode.Overwrite).parquet(s"$basePath/manifest")
-    writeMeta(spark, basePath, d.agg(max(col("doc_id"))).head().getLong(0))
+    IndexScratch.HighWater(basePath).commit(docs.sparkSession,
+      d.agg(max(col("doc_id"))).head().getLong(0))
   }
 
   /** Append one new crawl batch: chunk it, store only the digests the
-    * store lacks, append its manifest rows, advance the commit point.
-    * Monotone-id precondition and replay semantics as in
-    * [[SpanIndexStore.appendSpanBatch]] (see the object doc).
+    * store lacks, append its id-guarded manifest rows, commit the
+    * high-water mark.
     */
   def appendChunkBatch(batch: DataFrame, basePath: String): Unit = {
     val spark = batch.sparkSession
     val b = batch.select("doc_id", "text").materializeOnce()
-    if (b.isEmpty) return // an empty crawl batch is a no-op
-    val indexedMax = spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    val bounds = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    if (bounds.getLong(0) <= indexedMax) {
-      // replay of a committed batch (every id already manifested) is a
-      // no-op; a genuinely out-of-order new batch fails loudly — its
-      // ids below the commit point would bypass the id guard's intent
-      val unmanifested = b.select("doc_id").distinct()
-        .join(spark.read.parquet(s"$basePath/manifest").select("doc_id"),
-          Seq("doc_id"), "left_anti")
-      require(unmanifested.isEmpty,
-        s"appendChunkBatch needs monotone crawl ids: batch min " +
-          s"${bounds.getLong(0)} <= indexed max $indexedMax and the batch " +
-          "holds unmanifested ids — not a replay of a committed batch")
-      return
-    }
-    val ch = chunksOf(b).materializeOnce()
-    // content-addressed dedup: only digests the PHYSICAL store lacks
-    // land (pinned before the append reads the table it writes)
-    Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-      "chunk_md5", Buckets)
-    spark.catalog.refreshTable(tableName(basePath))
-    val newDigests = digestRows(ch)
-      .join(spark.table(tableName(basePath)).select("chunk_md5"),
-        Seq("chunk_md5"), "left_anti")
-      .materializeOnce(eager = true)
-    // manifest id-guard: a half-committed previous attempt may have
-    // landed some rows already (pinned before the append for the same
-    // read-what-you-write reason)
-    val manifestRows = ch.select("doc_id", "off", "chunk_bytes", "chunk_md5")
-      .join(spark.read.parquet(s"$basePath/manifest").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .materializeOnce(eager = true)
-    Sinks.appendBucketed(newDigests, tableName(basePath), "chunk_md5", Buckets)
-    manifestRows.write.mode(SaveMode.Append).parquet(s"$basePath/manifest")
-    writeMeta(spark, basePath, bounds.getLong(1))
+    val hw = IndexScratch.HighWater(basePath)
+    hw.admit(b, spark.read.parquet(s"$basePath/manifest"), "appendChunkBatch")
+      .foreach { batchMax =>
+        val ch = chunksOf(b).materializeOnce()
+        // content-addressed dedup: only digests the PHYSICAL store lacks
+        // land (pinned before the append reads the table it writes)
+        val newDigests = digestRows(ch)
+          .join(chunks(basePath).physical(spark).select("chunk_md5"),
+            Seq("chunk_md5"), "left_anti")
+          .materializeOnce(eager = true)
+        val manifestRows = ch.select("doc_id", "off", "chunk_bytes", "chunk_md5")
+          .join(spark.read.parquet(s"$basePath/manifest").select("doc_id").distinct(),
+            Seq("doc_id"), "left_anti")
+          .materializeOnce(eager = true)
+        chunks(basePath).append(newDigests)
+        manifestRows.write.mode(SaveMode.Append).parquet(s"$basePath/manifest")
+        hw.commit(spark, batchMax)
+      }
   }
 
-  private def tombstonesPath(basePath: String): String = s"$basePath/tombstones"
-
-  /** Tombstone-delete documents from the store: writes only the merged
-    * deleted-id set — O(ids deleted so far), never O(store). The live
-    * manifest hides their rows; chunks referenced by nothing live stop
-    * counting in [[storageStats]] (they remain physically present
-    * until [[compactChunkStore]], exactly like a real blob store's
-    * deferred garbage collection). Idempotent; unknown ids are no-ops.
+  /** Tombstone-delete documents from the store. The live manifest hides
+    * their rows; chunks referenced by nothing live stop counting in
+    * [[storageStats]] (they remain physically present until
+    * [[compactChunkStore]], exactly like a real blob store's deferred
+    * garbage collection).
     */
-  def deleteChunkDocs(delIds: DataFrame, basePath: String): Unit = {
-    val spark = delIds.sparkSession
-    val del = delIds.select("doc_id").distinct()
-    val merged = tombstones(spark, basePath)
-      .map(_.unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true) // pin before overwriting what it read
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-  }
+  def deleteChunkDocs(delIds: DataFrame, basePath: String): Unit =
+    tombstones(basePath).merge(delIds)
 
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** The live manifest: physical rows minus tombstoned documents (the
-    * delete-batch-sized tombstone set broadcasts).
-    */
-  def liveManifest(spark: SparkSession, basePath: String): DataFrame = {
-    val m = spark.read.parquet(s"$basePath/manifest")
-    tombstones(spark, basePath)
-      .map(t => m.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(m)
-  }
+  /** The live manifest: physical rows minus tombstoned documents. */
+  def liveManifest(spark: SparkSession, basePath: String): DataFrame =
+    tombstones(basePath).live(spark.read.parquet(s"$basePath/manifest"))
 
   /** Fold tombstones into the physical state: rewrite the manifest
     * without deleted documents, drop store chunks no live manifest row
     * references (the deferred GC), clear the tombstone set. Stats are
     * unchanged (the filter moves from plan to storage).
     */
-  def compactChunkStore(spark: SparkSession, basePath: String): Unit = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
-      val live = liveManifest(spark, basePath).materializeOnce(eager = true)
-      Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-        "chunk_md5", Buckets)
-      spark.catalog.refreshTable(tableName(basePath))
-      val survivors = spark.table(tableName(basePath))
+  def compactChunkStore(spark: SparkSession, basePath: String): Unit =
+    tombstones(basePath).compact(spark) { t =>
+      val live = tombstones(basePath)
+        .hide(spark.read.parquet(s"$basePath/manifest"), Some(t))
+        .materializeOnce(eager = true)
+      val survivors = chunks(basePath).physical(spark)
         .join(live.select("chunk_md5").distinct(), Seq("chunk_md5"), "left_semi")
         .materializeOnce(eager = true)
-      Sinks.writeBucketed(survivors, tableName(basePath), "chunk_md5",
-        Buckets, Some(s"$basePath/chunks"))
+      chunks(basePath).overwrite(survivors)
       Sinks.swapRewrite(spark, live, s"$basePath/manifest")
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(basePath))
-      tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
     }
-  }
 
   /** The per-source storage-dedup rollup SERVED FROM THE STORE — the
     * same accounting as the full-scan [[Multimodal.mmChunkCdcDedup]],
@@ -203,16 +145,13 @@ object ChunkStore {
     */
   def storageStats(spark: SparkSession, basePath: String,
       docs: DataFrame): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath), s"$basePath/chunks",
-      "chunk_md5", Buckets)
-    spark.catalog.refreshTable(tableName(basePath))
     val m = liveManifest(spark, basePath)
       .join(docs.select("doc_id", "source"), "doc_id")
     val totals = m.groupBy("source").agg(
       count(lit(1)).as("n_chunks"),
       sum(col("chunk_bytes")).as("total_bytes"))
     val uniques = m.select("source", "chunk_md5").distinct()
-      .join(spark.table(tableName(basePath)), "chunk_md5")
+      .join(chunks(basePath).physical(spark), "chunk_md5")
       .groupBy("source").agg(
         count(lit(1)).as("n_unique_chunks"),
         sum(col("chunk_bytes")).as("unique_bytes"))
@@ -225,43 +164,22 @@ object ChunkStore {
   }
 
   /** One crawl-SYNC step: absorb the upstream's monotone new slice —
-    * the chunk store's entry in the crawl cycle (the `spanSync` shape).
+    * the chunk store's entry in the crawl cycle.
     *
     * @return the number of new documents absorbed
     */
-  def chunkSync(upstream: DataFrame, basePath: String): Long = {
-    val spark = upstream.sparkSession
-    val maxDoc = spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    val batch = upstream.select("doc_id", "text")
-      .filter(col("doc_id") > maxDoc)
-      .materializeOnce()
-    val n = batch.count()
-    if (n > 0) appendChunkBatch(batch, basePath)
-    n
-  }
+  def chunkSync(upstream: DataFrame, basePath: String): Long =
+    IndexScratch.HighWater(basePath).sync(upstream.select("doc_id", "text"))(
+      appendChunkBatch(_, basePath))
 
   /** Build-if-missing of the incremental chunk-store verification
-    * artifact: the older four-fifths of the corpus builds the store,
-    * the newest fifth arrives as one crawl batch (the
-    * `ensureSpanIndex` split). Build-only — no tombstones — so the
-    * gated entry's oracle can replay the full-scan recompute.
+    * artifact (the kernel's four-fifths split). Build-only — no
+    * tombstones — so the gated entry's oracle can replay the full-scan
+    * recompute.
     */
-  def ensureChunkStore(spark: SparkSession, dir: String): String = {
-    val base = IndexScratch.scratchBase(dir, "chunkstore")
-    IndexScratch.ensureBuilt(base,
-      IndexScratch.sourceFingerprint(spark, s"$dir/documents.parquet")) {
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(base))
-      val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tp)) fs.delete(tp, true)
-      val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val t = lo + (hi - lo) * 4 / 5
-      buildChunkStore(docs.filter(col("doc_id") <= t), base)
-      appendChunkBatch(docs.filter(col("doc_id") > t), base)
-    }
-    base
-  }
+  def ensureChunkStore(spark: SparkSession, dir: String): String =
+    IndexScratch.HighWater.ensureSplit(spark, dir, "chunkstore")(
+      buildChunkStore, appendChunkBatch)
 
   /** Query entry: the storage-dedup rollup off the batch-built store —
     * hash-checked against the FULL-SCAN `mm_chunk_cdc_dedup` oracle

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core.IndexScratch
 import graft.core.Materialize.MatOps
 import graft.sim.Vectors.norm64
-import graft.sinks.Sinks
 
 /** Persisted ANN index artifacts — train once, write, query many times
   * (reference analogue: meili.rs / indexing.rs, whose entire purpose is
@@ -25,10 +24,10 @@ import graft.sinks.Sinks
   *    this is the difference between re-shuffling the whole index per
   *    query batch and reading just the buckets the join needs.
   *
-  * Bucketed tables need a catalog entry; `Sinks.restoreBucketed`
-  * re-registers it in a fresh session over the persisted files, so the
+  * Both bucketed tables are kernel parts (`IndexScratch.Part`), so the
   * index survives the writing session (spec-checked by dropping the
-  * tables and reloading).
+  * tables and reloading); deletes are kernel tombstones on `vec_id`,
+  * and `meta/` holds the live corpus size `n`.
   *
   * The QUERY paths (`annIvfFromIndex` / `annIvfPqFromIndex`) call the
   * exact same `Similarity.ivfSearch` / `ivfPqSearch` the train-in-plan
@@ -48,14 +47,20 @@ object VectorIndexStore {
   final case class IvfPqIndex(centroids: DataFrame, lists: DataFrame,
                               books: DataFrame, codes: DataFrame, n: Long)
 
-  private val Buckets = 32
   private[graft] val IvfK = 16
 
-  /** Catalog names must be stable per index location (re-registration
-    * hits the same entry) and unique across locations.
+  private def lists(basePath: String) = IndexScratch.Part(basePath, "lists", "cid")
+  private def codes(basePath: String) = IndexScratch.Part(basePath, "codes", "vec_id")
+  private def tombstones(basePath: String) = IndexScratch.Tombstones(basePath, "vec_id")
+
+  private def writeN(spark: SparkSession, basePath: String, n: Long): Unit =
+    IndexScratch.writeMeta(spark, basePath, "n" -> n)
+
+  /** Live codes count: `n` sizes the ADC re-rank depth, which must track
+    * the live corpus.
     */
-  private def tableName(basePath: String, part: String): String =
-    "graft_idx_" + IndexScratch.md5hex(basePath).take(10) + "_" + part
+  private def recountN(spark: SparkSession, basePath: String): Unit =
+    writeN(spark, basePath, tombstones(basePath).live(codes(basePath).physical(spark)).count())
 
   private def normed(emb: DataFrame): DataFrame =
     emb.select("vec_id", "embedding").withColumn("norm", norm64("embedding"))
@@ -70,17 +75,15 @@ object VectorIndexStore {
     graft.functions.GraftFunctions.register(spark)
     val e = normed(emb).materializeOnce()
     val centroids = Similarity.ivfCentroids(e, IvfK)
-    val lists = Similarity.ivfInvertedIndex(e, centroids).materializeOnce()
-    val (books, codes) = Similarity.pqTrain(e)
+    val ivfLists = Similarity.ivfInvertedIndex(e, centroids).materializeOnce()
+    val (books, pqCodes) = Similarity.pqTrain(e)
     centroids.write.mode(SaveMode.Overwrite).parquet(s"$basePath/centroids")
-    books.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$basePath/books")
-    Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
-      Buckets, Some(s"$basePath/lists"))
-    Sinks.writeBucketed(codes, tableName(basePath, "codes"), "vec_id",
-      Buckets, Some(s"$basePath/codes"))
-    val n = codes.count() // codes is pinned: one narrow count at build
-    writeMeta(spark, basePath, n)
-    IvfPqIndex(centroids, lists, books, codes, n)
+    IndexScratch.overwriteSmall(books, s"$basePath/books")
+    lists(basePath).overwrite(ivfLists)
+    codes(basePath).overwrite(pqCodes)
+    val n = pqCodes.count() // codes is pinned: one narrow count at build
+    writeN(spark, basePath, n)
+    IvfPqIndex(centroids, ivfLists, books, pqCodes, n)
   }
 
   /** Plain-IVF variant: centroids + bucketed inverted lists only. */
@@ -89,20 +92,12 @@ object VectorIndexStore {
     graft.functions.GraftFunctions.register(spark)
     val e = normed(emb).materializeOnce()
     val centroids = Similarity.ivfCentroids(e, IvfK)
-    val lists = Similarity.ivfInvertedIndex(e, centroids).materializeOnce()
+    val ivfLists = Similarity.ivfInvertedIndex(e, centroids).materializeOnce()
     centroids.write.mode(SaveMode.Overwrite).parquet(s"$basePath/centroids")
-    Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
-      Buckets, Some(s"$basePath/lists"))
+    lists(basePath).overwrite(ivfLists)
     val n = e.count()
-    writeMeta(spark, basePath, n)
-    IvfPqIndex(centroids, lists, null, null, n)
-  }
-
-  /** Corpus size as a one-row parquet next to the other artifacts. */
-  private def writeMeta(spark: SparkSession, basePath: String, n: Long): Unit = {
-    import spark.implicits._
-    Seq(n).toDF("n").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$basePath/meta")
+    writeN(spark, basePath, n)
+    IvfPqIndex(centroids, ivfLists, null, null, n)
   }
 
   /** Indexed corpus size from metadata; an index written before the
@@ -111,18 +106,16 @@ object VectorIndexStore {
     */
   private def readMeta(spark: SparkSession, basePath: String,
       fallback: => DataFrame): Long =
-    if (IndexScratch.pathExists(spark, s"$basePath/meta"))
-      spark.read.parquet(s"$basePath/meta").head().getLong(0)
-    else fallback.count()
+    IndexScratch.readMeta(spark, basePath).map(_.head().getLong(0))
+      .getOrElse(fallback.count())
 
   /** Append a new vector batch to a PERSISTED IVF-PQ index without
     * retraining — the between-crawls maintenance move (the dedup side's
     * `MinhashIndexStore` twin): the FROZEN centroids assign the batch
     * to inverted lists (same top-2 multi-assignment as the build) and
     * the FROZEN codebooks encode it (`Similarity.pqEncode`), then both
-    * bucketed tables take the batch through `Sinks.appendBucketed` —
-    * only the batch is scanned, nothing re-trains, and reads stay
-    * exchange-free. Because per-vector assignment and encoding depend
+    * bucketed parts take the batch by append — only the batch is
+    * scanned, nothing re-trains, and reads stay exchange-free. Because per-vector assignment and encoding depend
     * only on the frozen quantizers, querying the appended index equals
     * querying an index REBUILT with the same quantizers over the full
     * corpus bit-for-bit (spec-pinned). Centroid drift is the documented
@@ -131,76 +124,31 @@ object VectorIndexStore {
     * fingerprint protocol (`IndexScratch.ensureBuilt` in
     * `annIvfPqIndexed`) already triggers one on source regeneration.
     *
-    * Append is IDEMPOTENT by vec_id: each table takes only the batch
-    * ids it doesn't already hold (one narrow anti-join per table,
-    * pinned before the write so the plan never reads the table it
-    * appends to), so a replayed append after a partial failure (lists
-    * appended, codes write crashed) repairs the missing half instead
-    * of duplicating rows and poisoning ADC ranking. Corollary
-    * contract: re-appending an already-indexed vec_id is a silent
-    * no-op — append assumes id↔vector immutability (to change a
-    * vector, delete it first or rebuild).
+    * Each table takes only the batch ids it doesn't already hold (a
+    * duplicated row would poison ADC ranking), and `meta.n` is the
+    * commit point. Corollary contract: re-appending an already-indexed
+    * vec_id is a silent no-op — append assumes id↔vector immutability
+    * (to change a vector, delete it first or rebuild).
     */
   def appendIvfPq(newEmb: DataFrame, basePath: String): IvfPqIndex = {
     val spark = newEmb.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val idx = loadIvfPq(spark, basePath)
     val e = normed(newEmb).materializeOnce(eager = true) // lists + codes
-    // dup prevention keys on PHYSICAL rows (tombstoned or not) — the
-    // live view from loadIvfPq hides tombstoned ids, and appending one
-    // of those again would insert a duplicate physical row per replay
-    val lists = Similarity.ivfMultiIndex(e, idx.centroids, assign = 2)
-      .join(physicalTable(spark, basePath, "lists", "cid")
+    val newLists = Similarity.ivfMultiIndex(e, idx.centroids, assign = 2)
+      .join(lists(basePath).physical(spark)
         .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
       .materializeOnce(eager = true)
-    val codes = Similarity.pqEncode(e, idx.books)
-      .join(physicalTable(spark, basePath, "codes", "vec_id")
+    val newCodes = Similarity.pqEncode(e, idx.books)
+      .join(codes(basePath).physical(spark)
         .select("vec_id"), Seq("vec_id"), "left_anti")
       .materializeOnce(eager = true)
-    Sinks.appendBucketed(lists, tableName(basePath, "lists"), "cid", Buckets)
-    Sinks.appendBucketed(codes, tableName(basePath, "codes"), "vec_id", Buckets)
-    // metadata n = a RECOUNT of LIVE codes (physical minus tombstones —
-    // n sizes the ADC re-rank depth, which must track the live corpus).
-    // Recount rather than add-the-batch-size: a retried partial failure
-    // would otherwise drift the cached value forever.
-    writeMeta(spark, basePath,
-      live(spark.table(tableName(basePath, "codes")),
-        tombstones(spark, basePath)).count())
+    lists(basePath).append(newLists)
+    codes(basePath).append(newCodes)
+    // recount rather than add-the-batch-size: a retried partial failure
+    // would otherwise drift the cached value forever
+    recountN(spark, basePath)
     loadIvfPq(spark, basePath)
-  }
-
-  private def tombstonesPath(basePath: String): String =
-    s"$basePath/tombstones"
-
-  /** The tombstoned vec_ids, if any delete ever ran on this index. */
-  private def tombstones(spark: SparkSession,
-      basePath: String): Option[DataFrame] =
-    if (IndexScratch.pathExists(spark, tombstonesPath(basePath)))
-      Some(spark.read.parquet(tombstonesPath(basePath)))
-    else None
-
-  /** Hide tombstoned rows from an index frame. The tombstone set is
-    * delete-batch-sized, so the anti-join broadcasts and the streamed
-    * (bucketed) side keeps its exchange-free partitioning.
-    */
-  private def live(df: DataFrame, tomb: Option[DataFrame]): DataFrame =
-    tomb.map(t => df.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(df)
-
-  /** The PHYSICAL bucketed table for an index part — includes
-    * tombstoned rows. Append-side dup prevention must key on this
-    * (physical rows, visible or not, are what duplicate), while query
-    * paths go through `loadIvfPq`, which filters.
-    */
-  private def physicalTable(spark: SparkSession, basePath: String,
-      part: String, keyCol: String): DataFrame = {
-    Sinks.restoreBucketed(spark, tableName(basePath, part),
-      s"$basePath/$part", keyCol, Buckets)
-    // fresh listing: appends can arrive from another session (the
-    // streaming gate's foreachBatch clone) and a stale relation cache
-    // would hide them from the dup guard and the query paths
-    spark.catalog.refreshTable(tableName(basePath, part))
-    spark.table(tableName(basePath, part))
   }
 
   /** Load a persisted index: tiny frames as plain parquet reads, the
@@ -211,17 +159,18 @@ object VectorIndexStore {
     */
   def loadIvfPq(spark: SparkSession, basePath: String,
       withPq: Boolean = true): IvfPqIndex = {
-    val tomb = tombstones(spark, basePath)
-    val lists = live(physicalTable(spark, basePath, "lists", "cid"), tomb)
+    val tomb = tombstones(basePath)
+    val tombIds = tomb.read(spark)
+    val liveLists = tomb.hide(lists(basePath).physical(spark), tombIds)
     val centroids = spark.read.parquet(s"$basePath/centroids")
     if (!withPq) {
-      val n = readMeta(spark, basePath, lists.select("vec_id").distinct())
-      IvfPqIndex(centroids, lists, null, null, n)
+      val n = readMeta(spark, basePath, liveLists.select("vec_id").distinct())
+      IvfPqIndex(centroids, liveLists, null, null, n)
     } else {
-      val codes = live(physicalTable(spark, basePath, "codes", "vec_id"), tomb)
-      IvfPqIndex(centroids, lists,
-        spark.read.parquet(s"$basePath/books"), codes,
-        readMeta(spark, basePath, codes))
+      val liveCodes = tomb.hide(codes(basePath).physical(spark), tombIds)
+      IvfPqIndex(centroids, liveLists,
+        spark.read.parquet(s"$basePath/books"), liveCodes,
+        readMeta(spark, basePath, liveCodes))
     }
   }
 
@@ -229,33 +178,18 @@ object VectorIndexStore {
     * between-crawls removal move (dedup survivors change, documents get
     * decontaminated away; the reference's diff classifies articles that
     * vanish from the upstream list as deleted, sync_service.rs:146-163).
-    * The delete itself writes only the merged tombstone id set — O(ids
-    * deleted so far), never O(index) — and every load anti-joins it
-    * away, so delete-then-query equals a frozen-quantizer rebuild over
-    * the surviving corpus bit-for-bit (per-vector assignment and
-    * encoding are independent, so hiding a row IS removing it;
-    * spec-pinned). Metadata `n` is recounted from live codes so the ADC
-    * re-rank depth tracks the live corpus.
-    *
-    * Deletes are idempotent (id-set union) and unknown ids are no-ops.
-    * A deleted id stays deleted even if re-appended ([[appendIvfPq]]
-    * skips ids with physical rows); to resurrect one, [[compactIvfPq]]
-    * first (physical removal), then append. When the tombstone set has
-    * grown past broadcast size, compaction folds it into the tables.
+    * Every load hides the kernel tombstones, so delete-then-query
+    * equals a frozen-quantizer rebuild over the surviving corpus
+    * bit-for-bit (per-vector assignment and encoding are independent,
+    * so hiding a row IS removing it; spec-pinned). Metadata `n` is
+    * recounted from live codes. When the tombstone set has grown past
+    * broadcast size, [[compactIvfPq]] folds it into the tables.
     */
   def deleteIvfPq(delIds: DataFrame, basePath: String): IvfPqIndex = {
     val spark = delIds.sparkSession
-    val del = delIds.select("vec_id").distinct()
-    // pin before overwriting the path the merge just read
-    val merged = tombstones(spark, basePath)
-      .map(_.unionByName(del).distinct())
-      .getOrElse(del)
-      .materializeOnce(eager = true)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(tombstonesPath(basePath))
-    val liveCodes = live(physicalTable(spark, basePath, "codes", "vec_id"),
-      Some(merged))
-    writeMeta(spark, basePath, liveCodes.count())
+    val merged = tombstones(basePath).merge(delIds)
+    writeN(spark, basePath,
+      tombstones(basePath).hide(codes(basePath).physical(spark), Some(merged)).count())
     loadIvfPq(spark, basePath)
   }
 
@@ -268,23 +202,15 @@ object VectorIndexStore {
     * re-appended.
     */
   def compactIvfPq(spark: SparkSession, basePath: String): IvfPqIndex = {
-    tombstones(spark, basePath).foreach { tomb =>
-      val t = tomb.materializeOnce(eager = true)
+    tombstones(basePath).compact(spark) { t =>
       // pin the filtered survivors before overwriting the tables they read
-      val lists = live(physicalTable(spark, basePath, "lists", "cid"), Some(t))
+      val liveLists = tombstones(basePath).hide(lists(basePath).physical(spark), Some(t))
         .materializeOnce(eager = true)
-      val codes = live(physicalTable(spark, basePath, "codes", "vec_id"), Some(t))
+      val liveCodes = tombstones(basePath).hide(codes(basePath).physical(spark), Some(t))
         .materializeOnce(eager = true)
-      Sinks.writeBucketed(lists, tableName(basePath, "lists"), "cid",
-        Buckets, Some(s"$basePath/lists"))
-      Sinks.writeBucketed(codes, tableName(basePath, "codes"), "vec_id",
-        Buckets, Some(s"$basePath/codes"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tombstonesPath(basePath)),
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(basePath)), true)
-      writeMeta(spark, basePath,
-        spark.table(tableName(basePath, "codes")).count())
+      lists(basePath).overwrite(liveLists)
+      codes(basePath).overwrite(liveCodes)
+      writeN(spark, basePath, codes(basePath).physical(spark).count())
     }
     loadIvfPq(spark, basePath)
   }
@@ -302,30 +228,26 @@ object VectorIndexStore {
     * a new one), and the fingerprint protocol rebuilds on source
     * regeneration.
     *
-    * Deletes run FIRST (same-cycle replacement never shows both);
-    * both halves are idempotent, so a replayed cycle is a no-op.
-    * Plan shape: two narrow id anti-joins (index side bucket-scanned)
-    * classify the crawl; only the new batch is assigned/encoded and
-    * only O(deleted) tombstones are written.
+    * The kernel's crawl diff classifies the crawl (index side
+    * bucket-scanned) and applies the deletes first; only the new batch
+    * is assigned/encoded and only O(deleted) tombstones are written. A
+    * cycle with nothing to do still recounts `meta.n`, so a replay after
+    * a crash between an append and its recount heals it.
     *
     * @return (n new vectors appended, n live vectors tombstoned)
     */
   def crawlSyncVectors(spark: SparkSession, basePath: String,
       upstream: DataFrame): (Long, Long) = {
-    import graft.core.Materialize.MatOps
-    val liveIds = loadIvfPq(spark, basePath).codes.select("vec_id")
-    val upIds = upstream.select("vec_id").materializeOnce()
-    val deleted = liveIds.join(upIds, Seq("vec_id"), "left_anti")
-      .materializeOnce(eager = true) // pin before the index is mutated
-    val newIds = upIds.join(liveIds, Seq("vec_id"), "left_anti")
-      .materializeOnce(eager = true)
-    val nDeleted = deleted.count()
-    if (nDeleted > 0) deleteIvfPq(deleted, basePath)
+    val (newIds, nDeleted) = IndexScratch.CrawlDiff(
+      loadIvfPq(spark, basePath).codes, upstream, "vec_id")(deleteIvfPq(_, basePath))
     val nNew =
       if (newIds.count() > 0) {
         val before = loadIvfPq(spark, basePath).n
         appendIvfPq(upstream.join(newIds, "vec_id"), basePath).n - before
-      } else 0L
+      } else {
+        if (nDeleted == 0) recountN(spark, basePath)
+        0L
+      }
     (nNew, nDeleted)
   }
 
@@ -405,7 +327,7 @@ object VectorIndexStore {
     // is build-only. If a future entry ever tombstones it, fail loudly
     // here instead of letting the hash gate diverge silently (delete
     // lifecycles belong on their own basePath, as vindex_sync's does).
-    require(!IndexScratch.pathExists(spark, tombstonesPath(base)),
+    require(tombstones(base).read(spark).isEmpty,
       s"shared oracle-gated IVF-PQ scratch at $base has tombstones; " +
         "probe-path oracles read the raw parquet and would diverge — " +
         "use a dedicated basePath for delete lifecycles or compact first")
@@ -454,8 +376,7 @@ object VectorIndexStore {
         Window.partitionBy(col("vec_id")).orderBy(col("ccos6").desc, col("cid"))))
       .filter(col("crk") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cid"))
-    val lists = listFilter(
-      live(physicalTable(spark, base, "lists", "cid"), tombstones(spark, base)))
+    val liveLists = listFilter(tombstones(base).live(lists(base).physical(spark)))
     // broadcast the PROBE side, stream the lists (the ivfPqSearch
     // shape): the probe set is query-batch-sized, and the 1→many
     // candidate fan-out must happen on the corpus side's parallel
@@ -464,7 +385,7 @@ object VectorIndexStore {
     // fan-out ran on the probe frame's ONE AQE-coalesced partition
     // (measured at sf1: a 17 s single-task stage expanding 11k probed
     // rows into 10.4M candidates).
-    broadcast(probed).join(lists, "cid")
+    broadcast(probed).join(liveLists, "cid")
       .select(col("q_id"), col("vec_id").as("cand_id"))
       .filter(col("q_id") =!= col("cand_id"))
       .distinct()
@@ -784,8 +705,7 @@ object VectorIndexStore {
     val cands = probeCandidates(spark, base, q, nprobe = 4)
       .withColumnRenamed("cand_id", "n_id")
     val books = spark.read.parquet(s"$base/books")
-    val codes = live(physicalTable(spark, base, "codes", "vec_id"),
-      tombstones(spark, base))
+    val liveCodes = tombstones(base).live(codes(base).physical(spark))
     // per-query ADC lookup table, keyed sub*PqCodes+code exactly as
     // Similarity.ivfPqSearch builds it (one definition of the geometry
     // via SubExpr, so the gated replay and the serving path can't drift)
@@ -800,7 +720,7 @@ object VectorIndexStore {
       .groupBy("q_id")
       .agg(map_from_entries(collect_list(struct(col("i"), col("contrib")))).as("lut"))
     val scored = cands
-      .join(codes.select(col("vec_id").as("n_id"), col("codes")), "n_id")
+      .join(liveCodes.select(col("vec_id").as("n_id"), col("codes")), "n_id")
       .join(broadcast(lut), "q_id")
       .select(col("q_id"), col("n_id"),
         round(expr(
@@ -901,9 +821,7 @@ object VectorIndexStore {
       IndexScratch.sourceFingerprint(spark, s"$dir/embeddings.parquet")) {
       // a crashed previous attempt may have left tombstones behind;
       // buildIvfPq overwrites every other artifact, so clear them too
-      val tp = new org.apache.hadoop.fs.Path(tombstonesPath(base))
-      val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tp)) fs.delete(tp, true)
+      tombstones(base).clear(spark)
       val emb = graft.core.Tables.embeddings(spark, dir)
         .select("vec_id", "embedding")
       val stale = emb.filter(pmod(col("vec_id"), lit(7)) =!= 3)

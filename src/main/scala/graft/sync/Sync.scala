@@ -52,9 +52,9 @@ object Sync {
 
   /** [[syncDiff]] over BUCKETED sides — SURVEY §5's own 100 TB answer
     * for the nightly diff, as an oracle-checked entry: both mirrors are
-    * written once through `Sinks.writeBucketed` (32 buckets on the key,
-    * sorted within buckets — at 100 TB each side IS maintained bucketed
-    * between runs), and the full-outer diff then reads bucket-aligned
+    * written once as store-kernel parts (`IndexScratch.Part`: 32
+    * buckets on the key, sorted within buckets — at 100 TB each side IS
+    * maintained bucketed between runs), and the full-outer diff then reads bucket-aligned
     * sides so the join plans with ZERO Exchange — the nightly diff of
     * two 100 TB mirrors moves no rows at all (plan-audited). The
     * bucketed artifacts live at a fingerprint-keyed scratch location
@@ -63,28 +63,21 @@ object Sync {
     * hash-checks against the SAME oracle.
     */
   def syncDiffBucketed(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.IndexScratch.{ensureBuilt, md5hex, scratchBase, sourceFingerprint}
+    import graft.core.IndexScratch.{Part, ensureBuilt, scratchBase, sourceFingerprint}
     val base = scratchBase(dir, "syncdiff")
-    def tbl(part: String) = "graft_syncdiff_" + md5hex(base).take(10) + "_" + part
-    val fp = sourceFingerprint(spark, s"$dir/orders.parquet")
-    val buckets = 32
-    ensureBuilt(base, fp) {
+    val remote = Part(base, "remote", "key")
+    val local = Part(base, "local", "lkey")
+    ensureBuilt(base, sourceFingerprint(spark, s"$dir/orders.parquet")) {
       val o = Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
-      graft.sinks.Sinks.writeBucketed(
-        o.filter(col("o_orderkey") % 11 =!= 0)
-          .select(col("o_orderkey").as("key"), col("o_totalprice").as("rev_remote")),
-        tbl("remote"), "key", buckets, Some(s"$base/remote"))
-      graft.sinks.Sinks.writeBucketed(
-        o.filter(col("o_orderkey") % 7 =!= 0)
-          .select(col("o_orderkey").as("lkey"),
-            when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
-              .otherwise(col("o_totalprice")).as("rev_local")),
-        tbl("local"), "lkey", buckets, Some(s"$base/local"))
+      remote.overwrite(o.filter(col("o_orderkey") % 11 =!= 0)
+        .select(col("o_orderkey").as("key"), col("o_totalprice").as("rev_remote")))
+      local.overwrite(o.filter(col("o_orderkey") % 7 =!= 0)
+        .select(col("o_orderkey").as("lkey"),
+          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1.0)
+            .otherwise(col("o_totalprice")).as("rev_local")))
     }
-    graft.sinks.Sinks.restoreBucketed(spark, tbl("remote"), s"$base/remote", "key", buckets)
-    graft.sinks.Sinks.restoreBucketed(spark, tbl("local"), s"$base/local", "lkey", buckets)
-    spark.table(tbl("remote"))
-      .join(spark.table(tbl("local")), col("key") === col("lkey"), "full_outer")
+    remote.physical(spark)
+      .join(local.physical(spark), col("key") === col("lkey"), "full_outer")
       .select(
         coalesce(col("key"), col("lkey")).as("key"),
         when(col("lkey").isNull, "new")

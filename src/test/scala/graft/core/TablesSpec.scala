@@ -70,4 +70,22 @@ class TablesSpec extends SparkSpec {
     assert(n.schema("label").dataType == IntegerType)
     assert(n.head.getAs[Int]("label") == 7)
   }
+
+  test("the plan memo stays within its cap across more distinct dirs than the cap") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-plan-memo")
+    val dirs = (0 until Tables.PlanCacheCap + 8).map { i =>
+      val d = Files.createDirectories(root.resolve(s"crawl$i"))
+      Files.copy(Paths.get(sf, "nation.parquet"), d.resolve("nation.parquet"))
+      d.toString
+    }
+    try {
+      dirs.foreach(d => assert(Tables.nation(spark, d).count() == 25))
+      assert(Tables.planCacheSize <= Tables.PlanCacheCap)
+      // the most recently read dir is still served from the memo
+      assert(Tables.nation(spark, dirs.last) eq Tables.nation(spark, dirs.last))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
 }
