@@ -306,6 +306,16 @@ object IndexScratch {
 
   object HighWater {
 
+    /** The build/crawl split of a corpus: the `doc_id` at four-fifths of
+      * its id range. Ids at or below it are the older corpus a frozen
+      * artifact is built from; the ids above it play the new crawl.
+      */
+    def splitDoc(docs: DataFrame): Long = {
+      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+      lo + (hi - lo) * 4 / 5
+    }
+
     /** Build-if-missing of an incremental verification artifact over a
       * corpus's `(doc_id, text)`: the older four-fifths (by doc_id — the
       * monotone-id split) go to `build`, the newest fifth arrives as one
@@ -320,9 +330,7 @@ object IndexScratch {
         // overwrites every other artifact
         Tombstones(base, "doc_id").clear(spark)
         val docs = Tables.documents(spark, dir).select("doc_id", "text")
-        val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val t = lo + (hi - lo) * 4 / 5
+        val t = splitDoc(docs)
         build(docs.filter(col("doc_id") <= t), base)
         append(docs.filter(col("doc_id") > t), base)
       }

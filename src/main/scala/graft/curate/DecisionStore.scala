@@ -148,7 +148,7 @@ object DecisionStore {
         spark.read.parquet(s"$base/models/decon_grams"))
       .select(col("doc_id"), col("contaminated"))
     val inc = graft.dedup.MinhashIndexStore
-      .dedupBatchAgainstIndex(newDocs, s"$base/mh")
+      .dedupIncrementalAgainstIndex(newDocs, s"$base/mh")
       .select(col("doc_id"), col("is_dup"))
     // within-batch near-dup survivor: min-id per batch cluster (the
     // dedup_cluster convention restricted to the batch)

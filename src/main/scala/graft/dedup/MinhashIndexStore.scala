@@ -112,8 +112,12 @@ object MinhashIndexStore {
 
   /** Gate a new `(doc_id, text)` batch against the PERSISTED index —
     * `dedupIncrementalDocs(newDocs, existing)` semantics where the
-    * existing side never recomputes signatures or bands. doc_ids must
-    * be disjoint from the indexed corpus's.
+    * existing side never recomputes signatures or bands. The batch's
+    * own ids are hidden from the index side, so the gate sees the index
+    * as it stood BEFORE the batch: a replay after a crash that already
+    * appended it (the `DecisionStore.appendDecisions` order: index
+    * first, decision rows last) recomputes the first attempt's verdicts,
+    * and a batch disjoint from the indexed corpus hides nothing.
     *
     * Physical strategy is chosen from the batch/corpus size ratio (two
     * cheap narrow counts — the same statistics-driven switch
@@ -134,38 +138,21 @@ object MinhashIndexStore {
     * crossover).
     */
   def dedupIncrementalAgainstIndex(newDocs: DataFrame,
-      basePath: String): DataFrame =
-    gateAgainstIndex(newDocs, basePath, hideBatch = false)
-
-  /** [[dedupIncrementalAgainstIndex]] against the index as it stood
-    * BEFORE the batch: the batch's own ids are hidden from the index
-    * side, so a replay after a crash that already appended the batch
-    * (the `DecisionStore.appendDecisions` order: index first, decision
-    * rows last) recomputes the verdicts of the first attempt. `newDocs`
-    * must be pinned (it is read twice).
-    */
-  private[graft] def dedupBatchAgainstIndex(newDocs: DataFrame,
-      basePath: String): DataFrame =
-    gateAgainstIndex(newDocs, basePath, hideBatch = true)
-
-  private def gateAgainstIndex(newDocs: DataFrame, basePath: String,
-      hideBatch: Boolean): DataFrame = {
+      basePath: String): DataFrame = {
     val spark = newDocs.sparkSession
     GraftFunctions.register(spark)
     val bGroups = groupsOf(newDocs).materializeOnce(eager = true)
     val pairs = incrementalVerifiedRepPairs(bGroups, basePath)
-    val hidden = tombstones(basePath).read(spark).map(_.select("doc_id"))
-    val hiddenOld =
-      if (!hideBatch) hidden
-      else Some(hidden.fold(newDocs.select("doc_id"))(
-        _.unionByName(newDocs.select("doc_id"))))
+    val batchIds = bGroups.select(explode(col("members")).as("doc_id"))
+    val hidden = tombstones(basePath).read(spark)
+      .fold(batchIds)(_.select("doc_id").unionByName(batchIds))
     // the gate's output is per-new-doc AGGREGATES, so document pairs
     // never materialize: each matched old group contributes its LIVE
     // member count and min live id (bucket-aligned aggregate over the
     // narrow member map — tombstoned docs drop here, and a group whose
     // members are all dead has no stats row, so the inner join also
     // drops candidates from dead groups)
-    val matches = pairs.join(liveMemberStats(spark, basePath, hiddenOld), "orep")
+    val matches = pairs.join(liveMemberStats(spark, basePath, hidden), "orep")
       .groupBy("brep")
       .agg(sum(col("n_old")).as("n_dups"), min(col("min_old")).as("first_dup"))
     bGroups.select(col("rep").as("brep"), explode(col("members")).as("doc_id"))
@@ -181,8 +168,8 @@ object MinhashIndexStore {
     * exchange-free aggregate off the rep-bucketed member map.
     */
   private def liveMemberStats(spark: SparkSession, basePath: String,
-      hidden: Option[DataFrame]): DataFrame = {
-    tombstones(basePath).hide(members(basePath).physical(spark), hidden)
+      hidden: DataFrame): DataFrame = {
+    tombstones(basePath).hide(members(basePath).physical(spark), Some(hidden))
       .groupBy("rep")
       .agg(count(lit(1)).as("n_old"), min(col("doc_id")).as("min_old"))
       .withColumnRenamed("rep", "orep")

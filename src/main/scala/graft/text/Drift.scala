@@ -118,12 +118,9 @@ object Drift {
     IndexScratch.ensureBuilt(base,
       IndexScratch.sourceFingerprint(spark, s"$dir/documents.parquet")) {
       val docs = Tables.documents(spark, dir).select("doc_id", "lang", "text")
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val t = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) * 4 / 5
+      val t = IndexScratch.HighWater.splitDoc(docs)
       buildDriftModel(docs.filter(col("doc_id") <= t), base)
-      import spark.implicits._
-      Seq(t).toDF("split_doc").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/meta")
+      IndexScratch.writeMeta(spark, base, "split_doc" -> t)
     }
     base
   }
